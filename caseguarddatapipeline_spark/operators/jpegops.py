@@ -18,7 +18,8 @@ DHT carrying the file's own canonical Huffman tables as the spec
 requires, SOS, entropy-coded MCUs with byte stuffing, EOI). The
 driver-facing fixture uses DC-ONLY blocks: a flat 8×8 block with DC
 coefficient 8·(v−128) decodes to the constant v EXACTLY (the IDCT of a
-DC-only block is DC/8, exact in binary floating point), so — like the
+DC-only block is DC/8 up to floating-point error far below the 0.5 the
+decoder rounds each 8-bit sample by), so — like the
 PNG stored-deflate and PDF size tricks — the file is a real container
 a strict third-party decoder accepts, yet every decoded byte is a
 closed-form function of (doc_id, block index) the SQL oracle states.
@@ -443,9 +444,12 @@ def _decode_scan(data, pos, w, h, comps, scan, qt, huff, restart):
     c = coeffs.reshape(nc, nby, nbx, 8, 8)
     px = np.einsum("ky,lx,nijkl->nijyx", _B, _B, c, optimize=True)
     px = px.transpose(0, 1, 3, 2, 4).reshape(nc, nby * 8, nbx * 8)
-    px = px[:, :h, :w] + 128.0
+    # level shift and clamp to 8-bit samples per component (T.81 output
+    # precision) BEFORE color conversion: the IDCT's floating-point error
+    # must not tip an exact .5 in the YCbCr → RGB equations
+    px = np.clip(np.round(px[:, :h, :w] + 128.0), 0, 255)
     if nc == 1:
-        return w, h, 1, np.clip(np.round(px[0]), 0, 255).astype(np.uint8)
+        return w, h, 1, px[0].astype(np.uint8)
     if nc == 3:  # YCbCr (JFIF) → RGB
         y, cb, cr = px[0], px[1] - 128.0, px[2] - 128.0
         rgb = np.stack(

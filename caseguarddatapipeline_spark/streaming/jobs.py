@@ -14,8 +14,11 @@ worker fleet is ONE streaming query:
   same guarantee the reference gives (its BRPOP scan order is per-poll).
 - retry + DLQ        → failed rows are re-appended to the queue dir with
   retry_count+1; rows exceeding MAX_RETRIES go to the DLQ sink (T4).
-- rate limiting      → ``maxFilesPerTrigger`` bounds intake per micro-batch
-  (T5; the streaming analog of max_jobs_per_hour).
+- rate limiting      → ``maxBytesPerTrigger`` bounds intake per micro-batch
+  at one task wave of file bytes (``spark.sql.files.maxPartitionBytes`` ×
+  ``defaultParallelism``), so a batch is sized from the data, not from a
+  file count (T5; the streaming analog of max_jobs_per_hour). An explicit
+  ``max_files_per_trigger`` switches back to file-count intake.
 
 Everything inside the batch is DataFrame-native; at scale the same topology
 runs on Kafka with ``maxOffsetsPerTrigger`` and a Delta DLQ.
@@ -28,6 +31,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -99,7 +103,7 @@ def kafka_queue_options(
     contract is unit-testable without a broker or the
     spark-sql-kafka connector on the classpath.
     ``max_offsets_per_trigger`` is the Kafka analog of the file source's
-    ``maxFilesPerTrigger`` rate limit (T5)."""
+    per-trigger intake bound (T5, see ``queue_source``)."""
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,
         "subscribe": topic,
@@ -123,29 +127,43 @@ def parse_job_records(records: DataFrame) -> DataFrame:
     ).select("job.*")
 
 
+def _task_wave_bytes(spark: SparkSession) -> int:
+    """File bytes one task wave reads: ``defaultParallelism`` splits of
+    ``spark.sql.files.maxPartitionBytes`` each — the same sizing a batch
+    scan of the queue directory would use."""
+    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    per_task = java_utils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
+    )
+    return per_task * spark.sparkContext.defaultParallelism
+
+
 def queue_source(
     spark: SparkSession,
     mode: str = "files",
     *,
     queue_dir: str | None = None,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
     **kafka_opts,
 ) -> DataFrame:
     """S10 queue source seam: one call site, two transports.
 
-    ``files`` (default, sandbox-runnable) reads the JSON job directory;
-    ``kafka`` builds the Kafka reader from ``kafka_queue_options(**
-    kafka_opts)`` and decodes values via ``parse_job_records`` — the
-    swap a production deployment makes first (requires the
-    spark-sql-kafka-0-10 package on the classpath)."""
+    ``files`` (default, sandbox-runnable) reads the JSON job directory.
+    Intake per micro-batch is one task wave of bytes
+    (``_task_wave_bytes``) unless ``max_files_per_trigger`` asks for a
+    file count instead. ``kafka`` builds the Kafka reader from
+    ``kafka_queue_options(**kafka_opts)`` and decodes values via
+    ``parse_job_records`` — the swap a production deployment makes first
+    (requires the spark-sql-kafka-0-10 package on the classpath)."""
     if mode == "files":
         if queue_dir is None:
             raise ValueError("files mode requires queue_dir=")
-        return (
-            spark.readStream.schema(JOB_SCHEMA)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .json(queue_dir)
-        )
+        reader = spark.readStream.schema(JOB_SCHEMA)
+        if max_files_per_trigger is None:
+            reader = reader.option("maxBytesPerTrigger", str(_task_wave_bytes(spark)))
+        else:
+            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+        return reader.json(queue_dir)
     if mode == "kafka":
         raw = (
             spark.readStream.format("kafka")
@@ -223,12 +241,32 @@ def make_batch_handler(
     REPLAY-EXACT: done/dead rows land in their own ``batch_id=N``
     partition via dynamic overwrite, retries write ONE deterministically
     named file per batch — a replayed batch overwrites its own outputs
-    byte-for-byte instead of appending duplicates."""
+    byte-for-byte instead of appending duplicates.
+
+    One tally job per batch finds which outcomes have rows and brings
+    back the retry rows; a sink with no rows is not written at all."""
 
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
         processed = process_job_batch(batch, fail_predicate).cache()
         try:
+            requeued = F.struct(*(
+                (F.col(c) + 1).alias(c) if c == "retry_count" else F.col(c)
+                for c in batch.columns
+            ))
+            tally = {
+                r["outcome"]: r["retries"]
+                for r in processed.groupBy("outcome").agg(
+                    # collect_list order is arbitrary: sorting on the
+                    # (priority, job_id) prefix restores the batch order
+                    F.sort_array(F.collect_list(F.when(
+                        F.col("outcome") == "retry",
+                        F.struct("priority", "job_id", requeued.alias("job")),
+                    ))).alias("retries")
+                ).collect()  # retry sets are small (failed jobs)
+            }
             for outcome, sink in (("done", out_dir), ("dead", dlq_dir)):
+                if outcome not in tally:
+                    continue
                 (processed.filter(F.col("outcome") == outcome)
                     .drop("outcome")
                     .withColumn("batch_id", F.lit(batch_id))
@@ -236,17 +274,11 @@ def make_batch_handler(
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
                     .parquet(sink))
-            retries = (
-                processed.filter(F.col("outcome") == "retry")
-                .drop("outcome")
-                .withColumn("retry_count", F.col("retry_count") + 1)
-            )
-            rows = retries.collect()  # retry sets are small (failed jobs)
-            if rows:
+            if "retry" in tally:
                 path = os.path.join(queue_dir, f"retry-{batch_id:06d}.json")
                 with open(path, "w") as fh:
-                    for r in rows:
-                        fh.write(json.dumps(r.asDict()) + "\n")
+                    for r in tally["retry"]:
+                        fh.write(json.dumps(r["job"].asDict()) + "\n")
         finally:
             processed.unpersist()
 
@@ -260,13 +292,15 @@ def run_jobs_stream(
     dlq_dir: str,
     checkpoint_dir: str,
     fail_predicate=None,
-    max_files_per_trigger: int = 10,
+    max_files_per_trigger: int | None = None,
 ):
     """Consume the job queue until drained (availableNow trigger).
 
     Each micro-batch: process in priority order; done → out_dir parquet;
     retry → re-enqueue into queue_dir (picked up by a later batch when
     run again); dead → dlq_dir. Returns the finished StreamingQuery.
+    Intake per micro-batch is ``queue_source``'s: one task wave of bytes,
+    or ``max_files_per_trigger`` files when that is given.
 
     All three sinks are REPLAY-EXACT (foreachBatch is at-least-once):
     done/dead rows land in their own ``batch_id=N`` partition via dynamic
@@ -305,14 +339,17 @@ def drain_queue(
     checkpoint_dir: str,
     fail_predicate=None,
     max_rounds: int = MAX_RETRIES + 1,
-) -> None:
-    """Run availableNow passes until the queue stops producing retries —
-    the batch-mode equivalent of the worker's long-running poll loop.
+) -> list[StreamingQuery]:
+    """Run ``max_rounds`` availableNow passes — the batch-mode equivalent
+    of the worker's long-running poll loop — and return each pass's
+    finished StreamingQuery. It always runs every pass and does not stop
+    early once a pass produces no retries; a pass with nothing new to
+    read runs no micro-batch.
 
     The checkpoint is SHARED across rounds: the file-stream source tracks
     consumed files in it, so each later round picks up only the retry files
     appended during the previous round (no reprocessing, no duplicates)."""
-    for _ in range(max_rounds):
+    return [
         run_jobs_stream(
             spark,
             queue_dir,
@@ -321,3 +358,5 @@ def drain_queue(
             checkpoint_dir,
             fail_predicate=fail_predicate,
         )
+        for _ in range(max_rounds)
+    ]

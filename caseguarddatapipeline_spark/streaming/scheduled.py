@@ -50,7 +50,6 @@ def scheduled_daily_sync(
     run_jobs_stream(
         spark, queue_dir, out_dir, dlq_dir, ckpt_dir,
         fail_predicate=fail_predicate,
-        max_files_per_trigger=1_000_000,  # AvailableNow bounds the run; no pacing
     )
 
     done = spark.read.schema(

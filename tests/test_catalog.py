@@ -55,6 +55,17 @@ def test_driver_window_all_oracle_backed():
     assert not missing, f"window slots without oracles: {missing}"
 
 
+def test_window_rejects_unknown_pinned_entry(monkeypatch):
+    """A pinned name that is not a catalog query (a typo, or a query
+    renamed away) fails the catalog build instead of silently shrinking
+    the pinned cohort."""
+    from caseguarddatapipeline_spark import catalog
+
+    monkeypatch.setattr(catalog, "_PINNED", [*catalog._PINNED, "no_such_query"])
+    with pytest.raises(AssertionError, match="no_such_query"):
+        catalog._window(list(QUERIES), ORACLES)
+
+
 def test_window_rotation_is_stalest_first():
     """Round-12 rotation guarantee: after the pinned entries, the window
     holds the stalest oracle-backed queries by (last hash-green round,

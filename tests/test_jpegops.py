@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from caseguarddatapipeline_spark.operators.jpegops import (
@@ -114,6 +114,9 @@ def test_restart_markers_roundtrip(nby, nbx, seed, restart):
     nbx=st.integers(1, 3),
     seed=st.integers(0, 2**31 - 1),
 )
+# Y=233, Cb=3 puts blue at exactly 11.5: IDCT float error in the Cb plane
+# used to round it down when the reference rounds it to 12
+@example(nby=2, nbx=3, seed=16816)
 @settings(**_SETTINGS)
 def test_color_ycbcr_decode(nby, nbx, seed):
     """3-component 1x1 YCbCr: flat DC-only planes decode through the

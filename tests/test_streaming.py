@@ -3,6 +3,9 @@ end-to-end through a file-backed queue with availableNow draining."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pyspark.sql.functions as F
 
 from caseguarddatapipeline_spark.operators.reconcile import (
@@ -11,10 +14,13 @@ from caseguarddatapipeline_spark.operators.reconcile import (
     store_snapshot,
 )
 from caseguarddatapipeline_spark.streaming.jobs import (
+    JOB_SCHEMA,
     MAX_RETRIES,
     drain_queue,
     jobs_from_reconciliation,
+    make_batch_handler,
     process_job_batch,
+    run_jobs_stream,
 )
 
 
@@ -66,6 +72,98 @@ def test_drain_queue_end_to_end(spark, sf_dir, tmp_path):
     assert all(r["retry_count"] == MAX_RETRIES - 1 for r in dead.collect())
     # no job processed twice
     assert done.select("job_id").distinct().count() == n_done
+
+
+def _write_queue(queue_dir: str, n_files: int = 10, per_file: int = 5) -> None:
+    """Small JSON queue files; priorities cycle so (priority, job_id)
+    order differs from job_id order."""
+    os.makedirs(queue_dir)
+    for f in range(n_files):
+        with open(os.path.join(queue_dir, f"jobs-{f:03d}.json"), "w") as fh:
+            for i in range(per_file):
+                job_id = f * per_file + i
+                fh.write(json.dumps({
+                    "job_id": job_id,
+                    "entity_id": job_id,
+                    "change_type": "update" if job_id % 2 else "new",
+                    "priority": 1 + job_id % 3,
+                    "retry_count": job_id % 2,
+                }) + "\n")
+
+
+def _drain(spark, root, fail_predicate):
+    """Drain a fresh 10-file queue under ``root``; returns the
+    micro-batches each round ran and the done / dead job ids."""
+    queue, out, dlq, ckpt = (os.path.join(root, d) for d in ("queue", "out", "dlq", "ckpt"))
+    _write_queue(queue)
+    queries = drain_queue(spark, queue, out, dlq, ckpt, fail_predicate=fail_predicate)
+    batches = [
+        sum(1 for p in q.recentProgress if p["numInputRows"] > 0) for q in queries
+    ]
+    done = sorted(r.job_id for r in spark.read.parquet(out).select("job_id").collect())
+    dead = sorted(r.job_id for r in spark.read.parquet(dlq).select("job_id").collect())
+    return batches, done, dead
+
+
+def test_drain_runs_one_microbatch_per_retry_round(spark, tmp_path):
+    # job_id % 7 == 0 fails every attempt. Jobs enqueued with
+    # retry_count 1 die on their second attempt, those with 0 on their third
+    batches, done, dead = _drain(spark, str(tmp_path), (F.col("job_id") % 7) == 0)
+    assert batches == [1] * MAX_RETRIES + [0]
+    assert dead == [j for j in range(50) if j % 7 == 0]
+    assert done == [j for j in range(50) if j % 7 != 0]
+
+
+def test_lower_partition_bytes_splits_the_drain(spark, tmp_path):
+    """The byte bound is live: shrinking the per-task split size shrinks
+    each micro-batch, and the outcome is unchanged."""
+    fail = (F.col("job_id") % 7) == 0
+    _, done, dead = _drain(spark, str(tmp_path / "wave"), fail)
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    # the queue is 10 files of ~440 B; 256 B x 4 task slots admits ~2 files
+    spark.conf.set(key, "256")
+    try:
+        split_batches, split_done, split_dead = _drain(spark, str(tmp_path / "split"), fail)
+    finally:
+        spark.conf.set(key, before)
+    assert split_batches[0] > 1
+    assert (split_done, split_dead) == (done, dead)
+
+
+def test_all_failing_round_writes_no_done_partition(spark, tmp_path):
+    queue, out, dlq, ckpt = (str(tmp_path / d) for d in ("queue", "out", "dlq", "ckpt"))
+    _write_queue(queue)
+    run_jobs_stream(spark, queue, out, dlq, ckpt, fail_predicate=F.lit(True))
+    # every job fails with budget left: neither parquet sink is written
+    assert os.listdir(out) == [] and os.listdir(dlq) == []
+    with open(os.path.join(queue, "retry-000000.json")) as fh:
+        assert len(fh.readlines()) == 50
+
+
+def test_retry_file_matches_collect_path(spark, tmp_path):
+    """The tally job's retry rows are written byte for byte as the plain
+    collect of the priority-ordered retry rows would write them."""
+    inbox = str(tmp_path / "inbox")
+    _write_queue(inbox)
+    batch = spark.read.schema(JOB_SCHEMA).json(inbox)
+    fail = (F.col("job_id") % 3) != 0
+    queue = str(tmp_path / "queue")
+    os.makedirs(queue)
+    make_batch_handler(queue, str(tmp_path / "out"), str(tmp_path / "dlq"), fail)(batch, 7)
+
+    rows = (
+        process_job_batch(batch, fail)
+        .filter(F.col("outcome") == "retry")
+        .drop("outcome")
+        .withColumn("retry_count", F.col("retry_count") + 1)
+        .collect()
+    )
+    expected = "".join(json.dumps(r.asDict()) + "\n" for r in rows).encode()
+    with open(os.path.join(queue, "retry-000007.json"), "rb") as fh:
+        written = fh.read()
+    assert len(rows) > 10
+    assert written == expected
 
 
 def test_kafka_queue_option_contract():

@@ -35,7 +35,7 @@ LIBRARY_COVERAGE = {
     "T1": "j4_watermark_updates + streaming/stateful.track_watermarks",
     "T3": "streaming/jobs.run_jobs_stream",
     "T4": "streaming/jobs (retry + DLQ routing)",
-    "T5": "streaming/jobs maxFilesPerTrigger",
+    "T5": "streaming/jobs maxBytesPerTrigger",
     "T6": "streaming/metrics.HealthListener",
     "T7": "scheduler concern (Trigger.AvailableNow in streaming runs)",
     "T8": "lifecycle concern (query.stop; not a data op)",
