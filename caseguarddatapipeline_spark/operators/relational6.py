@@ -178,7 +178,7 @@ def e1_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap = F.col("key_a") > F.col("key_b")
     indel = (
         allv.join(
-            F.broadcast(ids),
+            ids,
             (F.col("block") == F.col("block_b"))
             & (F.col("key_a") != F.col("key_b")),
         )

@@ -9,11 +9,15 @@ max_jobs_per_hour (worker.py:283-305).
 Spark-first, the queue is a file (or Kafka) stream of JSON job rows and the
 worker fleet is ONE streaming query:
 
-- priority ordering  → ORDER BY priority inside each foreachBatch
-  micro-batch (W4) — strict global priority within a batch, which is the
-  same guarantee the reference gives (its BRPOP scan order is per-poll).
+- priority ordering  → every file a micro-batch writes is in (priority,
+  job_id) order (W4): done/dead parquet files are sorted within each
+  file, and the retry file is sorted whole. A batch is settled as one
+  set, so no global sort (and no second scan of its input) is needed;
+  the reference's BRPOP scan order is per-poll too.
 - retry + DLQ        → failed rows are re-appended to the queue dir with
-  retry_count+1; rows exceeding MAX_RETRIES go to the DLQ sink (T4).
+  retry_count+1, and the next trigger of the same query reads them; rows
+  exceeding MAX_RETRIES go to the DLQ sink (T4). A drain ends when a
+  trigger finds no new file, which happens once every job is done or dead.
 - rate limiting      → ``maxBytesPerTrigger`` bounds intake per micro-batch
   at one task wave of file bytes (``spark.sql.files.maxPartitionBytes`` ×
   ``defaultParallelism``), so a batch is sized from the data, not from a
@@ -30,7 +34,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     IntegerType,
@@ -72,17 +76,24 @@ def jobs_from_reconciliation(detail: DataFrame) -> DataFrame:
     )
 
 
+def _attempt():
+    """The attempt a batch makes at each job: retry_count + 1, where a
+    missing or negative retry_count counts as 0. Every failed attempt
+    raises it, so each failing job reaches MAX_RETRIES and a drain ends."""
+    return F.greatest(F.col("retry_count"), F.lit(0)) + 1
+
+
 def process_job_batch(batch: DataFrame, fail_predicate=None) -> DataFrame:
-    """Pure per-batch transform: order by priority, attempt each job,
-    tag the outcome. ``fail_predicate`` is a Column predicate marking jobs
-    that fail this attempt (tests inject deterministic failures)."""
+    """Pure per-batch transform: attempt each job and tag the outcome.
+    Row order is left to the sinks (``make_batch_handler``).
+    ``fail_predicate`` is a Column predicate marking jobs that fail this
+    attempt (tests inject deterministic failures)."""
     if fail_predicate is None:
         fail_predicate = F.lit(False)
-    ordered = batch.orderBy("priority", "job_id")
-    return ordered.withColumn(
+    return batch.withColumn(
         "outcome",
         F.when(~fail_predicate, F.lit("done"))
-        .when(F.col("retry_count") + 1 >= MAX_RETRIES, F.lit("dead"))
+        .when(_attempt() >= MAX_RETRIES, F.lit("dead"))
         .otherwise(F.lit("retry")),
     )
 
@@ -243,46 +254,77 @@ def make_batch_handler(
     named file per batch — a replayed batch overwrites its own outputs
     byte-for-byte instead of appending duplicates.
 
-    One tally job per batch finds which outcomes have rows and brings
-    back the retry rows; a sink with no rows is not written at all."""
+    One job per batch scans the input once: it counts the done rows
+    and brings back the failed ones (retry and dead). A sink with no rows
+    is not written at all. Every written file is in (priority, job_id)
+    order; the retry rows are sorted in Python by (priority, job_id, then
+    every column) with nulls first, as Spark's ascending sort does."""
 
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
         processed = process_job_batch(batch, fail_predicate).cache()
         try:
-            requeued = F.struct(*(
-                (F.col(c) + 1).alias(c) if c == "retry_count" else F.col(c)
-                for c in batch.columns
-            ))
-            tally = {
-                r["outcome"]: r["retries"]
-                for r in processed.groupBy("outcome").agg(
-                    # collect_list order is arbitrary: sorting on the
-                    # (priority, job_id) prefix restores the batch order
-                    F.sort_array(F.collect_list(F.when(
-                        F.col("outcome") == "retry",
-                        F.struct("priority", "job_id", requeued.alias("job")),
-                    ))).alias("retries")
-                ).collect()  # retry sets are small (failed jobs)
-            }
+            done = Observation()
+            failed = (
+                processed.observe(
+                    done, F.count_if(F.col("outcome") == "done").alias("rows")
+                )
+                .filter(F.col("outcome") != "done")
+                .withColumn("retry_count", _attempt())
+                .collect()  # failed jobs only: small
+            )
+            outcomes = {r["outcome"] for r in failed}
+            if done.get["rows"]:
+                outcomes.add("done")
             for outcome, sink in (("done", out_dir), ("dead", dlq_dir)):
-                if outcome not in tally:
+                if outcome not in outcomes:
                     continue
                 (processed.filter(F.col("outcome") == outcome)
                     .drop("outcome")
+                    .sortWithinPartitions("priority", "job_id")
                     .withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
                     .parquet(sink))
-            if "retry" in tally:
+            if "retry" in outcomes:
+                key = ("priority", "job_id", *batch.columns)
+                retries = sorted(
+                    (r for r in failed if r["outcome"] == "retry"),
+                    key=lambda r: [(r[c] is not None, r[c]) for c in key],
+                )
                 path = os.path.join(queue_dir, f"retry-{batch_id:06d}.json")
                 with open(path, "w") as fh:
-                    for r in tally["retry"]:
-                        fh.write(json.dumps(r["job"].asDict()) + "\n")
+                    for r in retries:
+                        fh.write(json.dumps({c: r[c] for c in batch.columns}) + "\n")
         finally:
             processed.unpersist()
 
     return handle_batch
+
+
+def _jobs_writer(
+    spark: SparkSession,
+    queue_dir: str,
+    out_dir: str,
+    dlq_dir: str,
+    checkpoint_dir: str,
+    fail_predicate=None,
+    max_files_per_trigger: int | None = None,
+):
+    """The jobs stream up to its trigger: queue source → ``foreachBatch``
+    handler, checkpointed at ``checkpoint_dir``. Callers pick the trigger
+    and start it."""
+    os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(dlq_dir, exist_ok=True)
+    stream = queue_source(
+        spark,
+        "files",
+        queue_dir=queue_dir,
+        max_files_per_trigger=max_files_per_trigger,
+    )
+    return stream.writeStream.foreachBatch(
+        make_batch_handler(queue_dir, out_dir, dlq_dir, fail_predicate)
+    ).option("checkpointLocation", checkpoint_dir)
 
 
 def run_jobs_stream(
@@ -293,14 +335,14 @@ def run_jobs_stream(
     checkpoint_dir: str,
     fail_predicate=None,
     max_files_per_trigger: int | None = None,
-):
-    """Consume the job queue until drained (availableNow trigger).
+) -> StreamingQuery:
+    """One availableNow pass over the job queue: process what is queued
+    when the query starts, then stop. Returns the finished StreamingQuery.
 
-    Each micro-batch: process in priority order; done → out_dir parquet;
-    retry → re-enqueue into queue_dir (picked up by a later batch when
-    run again); dead → dlq_dir. Returns the finished StreamingQuery.
-    Intake per micro-batch is ``queue_source``'s: one task wave of bytes,
-    or ``max_files_per_trigger`` files when that is given.
+    Each micro-batch: done → out_dir parquet; retry → re-enqueue into
+    queue_dir (read by a later pass on the same checkpoint); dead →
+    dlq_dir. Intake per micro-batch is ``queue_source``'s: one task wave
+    of bytes, or ``max_files_per_trigger`` files when that is given.
 
     All three sinks are REPLAY-EXACT (foreachBatch is at-least-once):
     done/dead rows land in their own ``batch_id=N`` partition via dynamic
@@ -309,21 +351,11 @@ def run_jobs_stream(
     instead of appending duplicates (which would double-complete jobs and
     double-consume retry budgets).
     """
-    os.makedirs(out_dir, exist_ok=True)
-    os.makedirs(dlq_dir, exist_ok=True)
-
-    stream = queue_source(
-        spark,
-        "files",
-        queue_dir=queue_dir,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
     query = (
-        stream.writeStream.foreachBatch(
-            make_batch_handler(queue_dir, out_dir, dlq_dir, fail_predicate)
+        _jobs_writer(
+            spark, queue_dir, out_dir, dlq_dir, checkpoint_dir,
+            fail_predicate, max_files_per_trigger,
         )
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
@@ -338,25 +370,29 @@ def drain_queue(
     dlq_dir: str,
     checkpoint_dir: str,
     fail_predicate=None,
-    max_rounds: int = MAX_RETRIES + 1,
-) -> list[StreamingQuery]:
-    """Run ``max_rounds`` availableNow passes — the batch-mode equivalent
-    of the worker's long-running poll loop — and return each pass's
-    finished StreamingQuery. It always runs every pass and does not stop
-    early once a pass produces no retries; a pass with nothing new to
-    read runs no micro-batch.
+) -> StreamingQuery:
+    """Drain the job queue, retries included, in ONE streaming query — the
+    worker's long-running poll loop — and return it once stopped.
 
-    The checkpoint is SHARED across rounds: the file-stream source tracks
-    consumed files in it, so each later round picks up only the retry files
-    appended during the previous round (no reprocessing, no duplicates)."""
-    return [
-        run_jobs_stream(
-            spark,
-            queue_dir,
-            out_dir,
-            dlq_dir,
-            checkpoint_dir,
-            fail_predicate=fail_predicate,
-        )
-        for _ in range(max_rounds)
-    ]
+    A retry file written by batch N is read by the query's next trigger,
+    so retry rounds are just later micro-batches. Every attempt raises a
+    job's retry_count and the job is dead-lettered at MAX_RETRIES, so the
+    queue empties on its own; ``processAllAvailable`` returns when a
+    trigger finds no new file. Spark documents that call as meant for
+    testing because on an open stream "all available" is a moving target.
+    Here that is the contract: the drain blocks while producers keep
+    enqueuing, exactly as the worker loop keeps polling, and returns once
+    the queue is quiet.
+
+    The checkpoint holds the consumed-files log, so a later drain on the
+    same checkpoint reads only files added since (no reprocessing, no
+    duplicates), and a drain after a crash replays the uncommitted batch
+    into its replay-exact sinks."""
+    query = _jobs_writer(
+        spark, queue_dir, out_dir, dlq_dir, checkpoint_dir, fail_predicate
+    ).start()
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    return query

@@ -1,11 +1,14 @@
 """Streaming job pipeline (T3-T5): priority ordering, retry, DLQ routing —
-end-to-end through a file-backed queue with availableNow draining."""
+end-to-end through a file-backed queue. ``drain_queue`` runs one streaming
+query per drain whose later micro-batches read the retry files; every file
+it writes is in (priority, job_id) order."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from caseguarddatapipeline_spark.operators.reconcile import (
@@ -91,25 +94,40 @@ def _write_queue(queue_dir: str, n_files: int = 10, per_file: int = 5) -> None:
                 }) + "\n")
 
 
+def _parquet_files(directory: str) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(directory)
+        for f in fs if f.endswith(".parquet")
+    ]
+
+
+def _job_ids(directory: str) -> list[int]:
+    return sorted(
+        j for f in _parquet_files(directory)
+        for j in pq.read_table(f, columns=["job_id"]).column(0).to_pylist()
+    )
+
+
 def _drain(spark, root, fail_predicate):
-    """Drain a fresh 10-file queue under ``root``; returns the
-    micro-batches each round ran and the done / dead job ids."""
+    """Drain a fresh 10-file queue under ``root``; returns the input rows
+    of each micro-batch that read any and the done / dead job ids."""
     queue, out, dlq, ckpt = (os.path.join(root, d) for d in ("queue", "out", "dlq", "ckpt"))
     _write_queue(queue)
-    queries = drain_queue(spark, queue, out, dlq, ckpt, fail_predicate=fail_predicate)
-    batches = [
-        sum(1 for p in q.recentProgress if p["numInputRows"] > 0) for q in queries
-    ]
-    done = sorted(r.job_id for r in spark.read.parquet(out).select("job_id").collect())
-    dead = sorted(r.job_id for r in spark.read.parquet(dlq).select("job_id").collect())
-    return batches, done, dead
+    query = drain_queue(spark, queue, out, dlq, ckpt, fail_predicate=fail_predicate)
+    assert not query.isActive
+    rows = [p["numInputRows"] for p in query.recentProgress if p["numInputRows"] > 0]
+    return rows, _job_ids(out), _job_ids(dlq)
 
 
 def test_drain_runs_one_microbatch_per_retry_round(spark, tmp_path):
     # job_id % 7 == 0 fails every attempt. Jobs enqueued with
-    # retry_count 1 die on their second attempt, those with 0 on their third
-    batches, done, dead = _drain(spark, str(tmp_path), (F.col("job_id") % 7) == 0)
-    assert batches == [1] * MAX_RETRIES + [0]
+    # retry_count 1 die on their second attempt, those with 0 on their
+    # third. The first batch scans its 50 queued jobs once: a global sort
+    # would read them twice (its range-partitioner sample is a scan too)
+    rows, done, dead = _drain(spark, str(tmp_path), (F.col("job_id") % 7) == 0)
+    assert len(rows) == MAX_RETRIES
+    assert rows[0] == 50
     assert dead == [j for j in range(50) if j % 7 == 0]
     assert done == [j for j in range(50) if j % 7 != 0]
 
@@ -118,17 +136,73 @@ def test_lower_partition_bytes_splits_the_drain(spark, tmp_path):
     """The byte bound is live: shrinking the per-task split size shrinks
     each micro-batch, and the outcome is unchanged."""
     fail = (F.col("job_id") % 7) == 0
-    _, done, dead = _drain(spark, str(tmp_path / "wave"), fail)
+    rows, done, dead = _drain(spark, str(tmp_path / "wave"), fail)
     key = "spark.sql.files.maxPartitionBytes"
     before = spark.conf.get(key)
     # the queue is 10 files of ~440 B; 256 B x 4 task slots admits ~2 files
     spark.conf.set(key, "256")
     try:
-        split_batches, split_done, split_dead = _drain(spark, str(tmp_path / "split"), fail)
+        split_rows, split_done, split_dead = _drain(spark, str(tmp_path / "split"), fail)
     finally:
         spark.conf.set(key, before)
-    assert split_batches[0] > 1
+    assert len(rows) == MAX_RETRIES
+    assert len(split_rows) > MAX_RETRIES
+    assert split_rows[0] < 50
     assert (split_done, split_dead) == (done, dead)
+
+
+def test_drain_of_all_failing_queue_ends_in_the_dlq(spark, tmp_path):
+    """With every attempt failing the query still ends on its own: each
+    job is dead-lettered once its retry budget is spent, and the trigger
+    after that finds no new file."""
+    rows, done, dead = _drain(spark, str(tmp_path), F.lit(True))
+    assert len(rows) == MAX_RETRIES
+    assert done == []
+    assert dead == list(range(50))
+    dlq = spark.read.parquet(str(tmp_path / "dlq"))
+    assert {r.retry_count for r in dlq.select("retry_count").collect()} == {MAX_RETRIES - 1}
+
+
+def test_job_without_retry_count_still_reaches_the_dlq(spark, tmp_path):
+    """A missing or negative retry_count counts as 0, so a drain of jobs
+    that fail every attempt still ends with them in the DLQ."""
+    queue, out, dlq, ckpt = (str(tmp_path / d) for d in ("queue", "out", "dlq", "ckpt"))
+    os.makedirs(queue)
+    with open(os.path.join(queue, "jobs-000.json"), "w") as fh:
+        for job in ({"job_id": 1, "priority": 1}, {"job_id": 2, "priority": 1, "retry_count": -5}):
+            fh.write(json.dumps({"entity_id": job["job_id"], "change_type": "new", **job}) + "\n")
+    query = drain_queue(spark, queue, out, dlq, ckpt, fail_predicate=F.lit(True))
+    rows = [p["numInputRows"] for p in query.recentProgress if p["numInputRows"] > 0]
+    assert rows == [2] * MAX_RETRIES
+    assert _job_ids(out) == [] and _job_ids(dlq) == [1, 2]
+    with open(os.path.join(queue, "retry-000000.json")) as fh:
+        assert [json.loads(line)["retry_count"] for line in fh] == [1, 1]
+
+
+def test_drain_of_empty_queue_writes_nothing(spark, tmp_path):
+    queue, out, dlq, ckpt = (str(tmp_path / d) for d in ("queue", "out", "dlq", "ckpt"))
+    os.makedirs(queue)
+    query = drain_queue(spark, queue, out, dlq, ckpt)
+    assert not query.isActive
+    assert all(p["numInputRows"] == 0 for p in query.recentProgress)
+    assert os.listdir(queue) == []
+    assert os.listdir(out) == [] and os.listdir(dlq) == []
+
+
+def test_every_done_file_is_in_priority_order(spark, tmp_path):
+    """Priorities cycle with job_id, so a file holding more than one
+    queue file's rows is in (priority, job_id) order only if it was
+    sorted."""
+    _drain(spark, str(tmp_path), (F.col("job_id") % 7) == 0)
+    files = _parquet_files(str(tmp_path / "out"))
+    assert files
+    seen = 0
+    for f in files:
+        rows = pq.read_table(f, columns=["priority", "job_id"]).to_pylist()
+        keys = [(r["priority"], r["job_id"]) for r in rows]
+        assert keys == sorted(keys), f
+        seen += len(keys)
+    assert seen == 50 - len(range(0, 50, 7))
 
 
 def test_all_failing_round_writes_no_done_partition(spark, tmp_path):
@@ -157,6 +231,7 @@ def test_retry_file_matches_collect_path(spark, tmp_path):
         .filter(F.col("outcome") == "retry")
         .drop("outcome")
         .withColumn("retry_count", F.col("retry_count") + 1)
+        .orderBy("priority", "job_id")
         .collect()
     )
     expected = "".join(json.dumps(r.asDict()) + "\n" for r in rows).encode()
